@@ -160,8 +160,7 @@ def crawl_bench(spark, sf: float, respect_robots: bool = False):
         record_fetch_log=False,          # scale path: no driver collects
         tokens_per_host_per_wave=256,    # politeness budget ON
         host_buckets=max(CPUS * 4, 64),
-        id_mode="composite",
-        raw_url_prefilter=False)
+        id_mode="composite")
     crawler = WaveCrawler(spark, pages.drop("host_id", "page_id"), cfg,
                           keep_content=False)
     # seed frontier directly (distributed build, no driver loop)

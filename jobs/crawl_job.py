@@ -63,11 +63,6 @@ def build_args(argv):
                         "restores the monolithic synchronous commit")
     p.add_argument("--no-async-commit", dest="async_commit",
                    action="store_false")
-    p.add_argument("--raw-prefilter", action="store_true",
-                   help="enable the pre-canonicalization raw-URL-seen "
-                        "anti-join (identical frontier either way; pays "
-                        "only when the slow canonicalization path "
-                        "dominates, e.g. user fetch conditions)")
     return p.parse_args(argv)
 
 
@@ -105,7 +100,6 @@ def main(argv=None) -> int:
         tokens_per_host_per_wave=args.tokens_per_host,
         host_buckets=args.host_buckets,
         bloom_capacity_per_bucket=args.bloom_capacity,
-        raw_url_prefilter=args.raw_prefilter,
         async_commit=args.async_commit,
         max_waves=args.waves)
 

@@ -69,34 +69,12 @@ class CrawlerConfig:
     # and ~100x lower FPR at the cost of ~2x blob bytes. Both share the
     # versioned side-table persistence and the no-false-negative contract.
     seen_filter: str = "bloom"
-    # drop candidates whose (raw_url, referrer-resolution key) was already
-    # attempted in a previous wave BEFORE python canonicalization (exact
-    # anti-join — the frontier result is identical; cross-wave re-attempts
-    # are counted as queueduplicate instead of re-running their original
-    # reject classification). The dominant python cost at scale.
-    raw_url_prefilter: bool = False
-    # robots verdicts from a distributed ``robots_rules`` side table
-    # (SURVEY §1.1): one row per touched origin with the UA-selected rule
-    # list, joined into the due set / candidate stream and evaluated
-    # executor-side — the driver then retains NO parsed robots objects and
-    # never rebuilds an O(hosts) broadcast. Applies when no fetch
-    # conditions are registered (conditions must run after the robots
-    # gate INSIDE the candidate kernel, which needs the broadcast store);
-    # False forces the legacy broadcast path everywhere.
-    robots_side_table: bool = True
     tokens_per_host_per_wave: Optional[int] = None  # None = unlimited (politeness off)
     max_waves: int = 1000
     # ids are dense + reference-identical in both modes; 'composite' forces
     # the distributed two-phase ranking (scale path, shuffles fresh rows
     # only), 'dense' picks a single-partition window for small inputs
     id_mode: str = "dense"
-    # cache the pages table hash-partitioned + sorted on ``url`` at crawler
-    # construction, so every wave's sort-merge fetch join reuses the cached
-    # layout instead of re-shuffling and re-sorting the whole corpus per
-    # wave. The real-cluster analog is a url-bucketed pages table (Iceberg
-    # ``bucket(url)`` partition transform): the 100-TB side of the join is
-    # laid out once, and each wave shuffles only the due rows.
-    copartition_pages: bool = True
     # double-buffered wave commit (store-backed fused waves only): write the
     # enqueue half of the wave delta synchronously — the only half the next
     # wave's dataflow reads — and overlap the outcome half + manifest write

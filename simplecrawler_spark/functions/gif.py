@@ -55,12 +55,10 @@ def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> bytearray:
     acc = 0
     nbits = 0
     pos = 0
+    # the loop ends at the pixel count, so a stream may omit its EOI code
     while len(out) < n_pixels:
         while nbits < code_size:
             if pos >= len(data):
-                # streams may end exactly at the pixel count without EOI
-                if len(out) >= n_pixels:
-                    break
                 raise ValueError("LZW stream truncated")
             acc |= data[pos] << nbits
             nbits += 8

@@ -56,7 +56,9 @@ class _Rule:
 
 
 def _compile_rule(pattern: str, allow: bool) -> _Rule:
-    pattern = _normalize_path(pattern)
+    """Rule from an already-normalized pattern (``_normalize_path`` runs
+    once, at parse time: a ``rules_payload`` entry decoded again would turn
+    a literal ``%25xx`` into ``%xx``)."""
     if _WILDCARD_CHARS.search(pattern):
         parts = []
         for ch in pattern:
@@ -220,7 +222,7 @@ def parse_robots(robots_url: str, body: str) -> RobotsFile:
                 continue  # empty Disallow/Allow: no rule
             for a in (current_agents or ["*"]):
                 rf.groups.setdefault(a, []).append(
-                    _compile_rule(value, key == "allow"))
+                    _compile_rule(_normalize_path(value), key == "allow"))
         elif key == "crawl-delay":
             seen_rule_in_group = True
             try:

@@ -15,14 +15,14 @@ Two mapInPandas passes carry ALL per-row Python work of a wave:
 Everything else in the wave (status branching, joins, dedupe, politeness
 ranking, id assignment) is JVM-side DataFrame code — no per-row Python.
 
-Robots verdicts have two shapes: the default scale path joins the
-``robots_rules`` side table and evaluates only the joined rules cell with
-a scalar pandas UDF (``robots_allowed_udf`` — zero O(hosts) driver or
-broadcast state, only two string columns cross Arrow); with user fetch
-conditions the verdict runs
-inside the candidate kernel from a Spark broadcast of the store (one
-executor-cached copy, rebuilt only when a robots file is added — never a
-per-wave closure capture, which would be O(hosts) bytes per wave).
+Robots verdicts have two shapes: without user fetch conditions the wave
+joins the ``robots_rules`` side table and folds the origin's rules JVM-side
+(``prep_rules_udf`` decomposes each origin's rule list once — zero O(hosts)
+driver or broadcast state, no Python in the row mass); with user fetch
+conditions the verdict runs inside the candidate kernel from a Spark
+broadcast of the store (one executor-cached copy, rebuilt only when a
+robots file is added — never a per-wave closure capture, which would be
+O(hosts) bytes per wave).
 """
 
 from __future__ import annotations
@@ -124,38 +124,6 @@ def make_body_processor(config: CrawlerConfig) -> Callable:
             yield pd.DataFrame(out)
 
     return process
-
-
-def robots_allowed_udf():
-    """Scalar pandas UDF ``(rules_json, url) -> allowed`` — the verdict
-    kernel of the distributed ``robots_rules`` side-table path.
-
-    A scalar UDF (not mapInPandas) so ONLY the two string columns cross
-    the Arrow boundary: the due/candidate rows it gates are wide (referrer
-    structs, state payloads), and round-tripping them through a Python
-    worker just to append one boolean measurably inflated the robots-ON
-    wave time (robots_overhead_x in the bench JSON: 1.7x before this +
-    the side-table broadcast hints, ~1.03x after). With a scalar
-    UDF the wide payload stays JVM-side and the evaluation pipelines into
-    the surrounding stage.
-
-    Null semantics: no side-table row for the origin (rules_json null) or
-    a null url ⇒ allowed — identical to the store's no-file default
-    (crawler.ts:692-695 fold default true)."""
-    from pyspark.sql.functions import pandas_udf
-    from ..functions.robots import eval_rules
-
-    @pandas_udf("boolean")
-    def allowed(rules_json: pd.Series, url: pd.Series) -> pd.Series:
-        out = np.full(len(rules_json), True, dtype=object)
-        rj_a = rules_json.to_numpy(object)
-        url_a = url.to_numpy(object)
-        for i in np.nonzero(rules_json.notna().to_numpy(bool)
-                            & url.notna().to_numpy(bool))[0]:
-            out[i] = bool(eval_rules(rj_a[i], url_a[i]))
-        return pd.Series(out, dtype="boolean")
-
-    return allowed
 
 
 def prep_rules_udf():

@@ -30,7 +30,8 @@ Two due-selection paths:
   disallowed split happen driver-side, minimizing Spark job count (each job
   carries ~0.3 s fixed cost on a local cluster).
 - ``record_fetch_log=False`` (bench / scale): everything stays distributed;
-  robots verdicts run in an Arrow pass over the due partition.
+  robots verdicts are a JVM fold over the joined ``robots_rules`` side
+  table (an Arrow pass over a broadcast store only with fetch conditions).
 """
 
 from __future__ import annotations
@@ -132,14 +133,13 @@ class WaveCrawler:
         self.bloom = bloom
         self.keep_content = keep_content
         # pages table: fetch = frontier ⨝ pages on url (input_hint corpus).
-        # copartition_pages lays the corpus out ONCE — hash-partitioned and
-        # sorted on url, cached — so the per-wave sort-merge fetch join
-        # exchanges and sorts only the due side; the pages side is a cache
-        # scan with matching partitioning + ordering. One corpus-sized
-        # shuffle at construction replaces one per wave (the Iceberg analog
-        # is a bucket(url)-partitioned table, laid out at write time).
-        if (config.copartition_pages and not config.live_fetch
-                and pages is not None):
+        # The corpus is laid out ONCE — hash-partitioned and sorted on url,
+        # cached — so the per-wave sort-merge fetch join exchanges and
+        # sorts only the due side; the pages side is a cache scan with
+        # matching partitioning + ordering. One corpus-sized shuffle at
+        # construction replaces one per wave (the Iceberg analog is a
+        # bucket(url)-partitioned table, laid out at write time).
+        if not config.live_fetch and pages is not None:
             try:
                 grain = int(spark.conf.get("spark.sql.shuffle.partitions"))
             except (TypeError, ValueError):
@@ -154,24 +154,22 @@ class WaveCrawler:
         self.cache = cache  # (url, etag, last_modified) from a previous crawl
         self.robots = RobotsStore(config.user_agent)
         # robots verdict source, two shapes (SURVEY §1.1):
-        # - side table (default at scale): one row per touched origin with
-        #   the UA-selected rule list, maintained as base+parts like the
-        #   frontier; verdicts run executor-side via join + Arrow kernel.
-        #   The driver parses each robots body once, appends the row, and
-        #   RETAINS NOTHING — O(new origins) transient work per wave, zero
-        #   O(hosts) driver state or broadcast.
-        # - broadcast store (driver/golden path, or with fetch conditions —
-        #   those run after the robots gate inside the candidate kernel):
-        #   rebuilt only when a robots file is added.
+        # - side table (no fetch conditions): one row per touched origin
+        #   with the UA-selected rule list, maintained as base+parts like
+        #   the frontier; verdicts run executor-side as a JVM fold over the
+        #   joined rules. The driver parses each robots body once, appends
+        #   the row, and RETAINS NOTHING — O(new origins) transient work
+        #   per wave, zero O(hosts) driver state or broadcast.
+        # - broadcast store (with fetch conditions — those run after the
+        #   robots gate inside the candidate kernel): rebuilt only when a
+        #   robots file is added.
         self._robots_side_active = bool(
-            config.respect_robots_txt and config.robots_side_table
-            and not config.fetch_conditions)
+            config.respect_robots_txt and not config.fetch_conditions)
         # the driver keeps parsed RobotsFile objects only when some
         # consumer needs them: the driver due path (record_fetch_log) and
-        # in-kernel verdicts (fetch conditions / side table disabled)
+        # in-kernel verdicts (fetch conditions)
         self._robots_retain = bool(
-            config.record_fetch_log or config.fetch_conditions
-            or not config.robots_side_table)
+            config.record_fetch_log or config.fetch_conditions)
         self._robots_side_base: Optional[DataFrame] = None
         self._robots_side_parts: List[DataFrame] = []
         self._robots_side_rowbuf: List[tuple] = []
@@ -242,19 +240,6 @@ class WaveCrawler:
         self._commit_pool = None  # lazily-created 1-worker executor
         self._fetch_log_overflow = False  # due set exceeded fetch_log_max_due
         self._wave_caches: List[DataFrame] = []
-        # raw-URL-seen set for the pre-python prefilter (performance state
-        # only: resume starts empty and repopulates — exactness unaffected).
-        # Maintained base + per-wave distinct-delta parts exactly like the
-        # frontier: a wave appends ONE O(wave-attempts) checkpoint instead
-        # of re-materializing the whole accumulated set (the old
-        # union+distinct+checkpoint was O(total-attempts) per wave — the
-        # same pattern the frontier was cured of). The anti-join consumer
-        # tolerates duplicate keys across parts, so no global distinct is
-        # needed until ratio-triggered compaction folds the parts.
-        self._raw_seen_base: Optional[DataFrame] = None
-        self._raw_seen_parts: List[DataFrame] = []
-        self._raw_seen_base_rows = 0   # upper bound (compaction ratio)
-        self._raw_seen_part_rows = 0   # upper bound rows across parts
         self.first_request_active = True   # _isFirstRequest, crawler.ts:597
         seed = process_url(config.initial_url, None, 0, config.url_options(),
                            initial_url=config.initial_url)
@@ -435,8 +420,7 @@ class WaveCrawler:
         if self._robots_pages is not None:
             self._robots_pages.unpersist()
             self._robots_pages = None
-        if self.config.copartition_pages and not self.config.live_fetch \
-                and self.pages is not None:
+        if not self.config.live_fetch and self.pages is not None:
             self.pages.unpersist()
         if self._robots_bc is not None:
             self._robots_bc.unpersist()
@@ -503,52 +487,6 @@ class WaveCrawler:
                 .withColumn("__rn", F.row_number().over(
                     w.orderBy("referrer_id", "pos")))
                 .filter("__rn = 1").drop("__rn"))
-
-    def _raw_seen_view(self) -> Optional[DataFrame]:
-        """(raw_url, __rk) keys attempted in earlier waves — union of base +
-        parts, duplicates tolerated (anti-join membership only)."""
-        parts = ([self._raw_seen_base]
-                 if self._raw_seen_base is not None else []) \
-            + self._raw_seen_parts
-        if not parts:
-            return None
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _raw_seen_append(self, part: DataFrame, n_rows_ub: int) -> None:
-        """Record one wave's materialized distinct-delta; fold to a single
-        deduped base when the part mass outgrows the base (LSM ratio — the
-        same COMPACT_* knobs as the frontier) or the part list gets wide.
-        Row accounting uses driver-known upper bounds (the wave's kernel
-        row count), so no counting job is ever launched for this."""
-        self._raw_seen_parts.append(part)
-        self._raw_seen_part_rows += n_rows_ub
-        if not (self._raw_seen_part_rows
-                > max(COMPACT_RATIO * max(self._raw_seen_base_rows, 1),
-                      COMPACT_MIN_ROWS)
-                or len(self._raw_seen_parts) > COMPACT_MAX_PARTS):
-            return
-        with _timed("raw-seen-compact"):
-            folded = self._raw_seen_view().distinct() \
-                .localCheckpoint(eager=True)
-            self._raw_seen_base = folded
-            self._raw_seen_parts = []
-            self._raw_seen_base_rows += self._raw_seen_part_rows
-            self._raw_seen_part_rows = 0
-
-    def _raw_key(self):
-        """Referrer-resolution key for the raw-seen prefilter: an absolute
-        raw URL canonicalizes independently of its referrer, so it collapses
-        to one key when no referrer-sensitive gate (maxDepth, fetch
-        conditions) is active; otherwise the referrer page is part of the
-        key, which keeps per-referrer gate verdicts exact."""
-        cfg = self.config
-        collapse = F.lit(cfg.max_depth == 0 and not cfg.fetch_conditions) & \
-            F.col("raw_url").rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
-        return F.when(collapse, F.lit("")).otherwise(
-            F.coalesce(F.col("referrer_url"), F.lit("")))
 
     def _apply_set_cookies(self, rows: List[Tuple[str, int]]) -> int:
         """Upsert deduped (header, multiplicity) Set-Cookie rows into the
@@ -1055,27 +993,6 @@ class WaveCrawler:
             out = p if out is None else out.unionByName(p)
         return out
 
-    def _with_rules_json(self, df: DataFrame, side: DataFrame) -> DataFrame:
-        """Left-join the rules side table onto rows carrying (protocol,
-        host, port) columns, adding ``rules_json`` (null = no applicable
-        rules). The port key is normalized — frontier/candidate rows use 0
-        (sometimes null) for a default port while the side table stores the
-        explicit 80/443."""
-        s = side.select(F.col("protocol").alias("__r_proto"),
-                        F.col("host").alias("__r_host"),
-                        F.col("port").alias("__r_port"),
-                        "rules_json")
-        if self._robots_file_count <= SIDE_BROADCAST_MAX_ROWS:
-            s = F.broadcast(s)
-        norm_port = (F.when(F.col("port").isNull() | (F.col("port") <= 0),
-                            F.when(F.col("protocol") == "https",
-                                   F.lit(443)).otherwise(F.lit(80)))
-                     .otherwise(F.col("port")))
-        return (df.join(s, (F.col("protocol") == F.col("__r_proto"))
-                        & (F.col("host") == F.col("__r_host"))
-                        & (norm_port == F.col("__r_port")), "left")
-                .drop("__r_proto", "__r_host", "__r_port"))
-
     def _with_rules_arr(self, df: DataFrame, side: DataFrame) -> DataFrame:
         """Left-join the rules side table onto rows carrying (protocol,
         host, port), adding ``rules_arr`` — the JVM-evaluable decomposition
@@ -1107,7 +1024,7 @@ class WaveCrawler:
         returns immediately (robots-parser quirk, first match in file
         order); otherwise the longest matching plain prefix wins, Allow
         winning length ties; no match => allowed. Zero Python in the row
-        mass: the old scalar-UDF verdict put a BatchEvalPython node in the
+        mass: a Python verdict would put a BatchEvalPython node in the
         wave's hottest plan, breaking whole-stage codegen and paying an
         Arrow round-trip per due/candidate row (parity: the eval-parity
         tests run this fold against eval_rules over the golden rule set —
@@ -1375,7 +1292,7 @@ class WaveCrawler:
             else:
                 # port key must match the parsed file's origin scoping
                 # (default port resolved from the protocol, crawler.ts
-                # origin semantics) — _with_rules_json normalizes frontier
+                # origin semantics) — _with_rules_arr normalizes frontier
                 # rows the same way
                 rport = port or (443 if proto == "https" else 80)
                 self._note_robots_entry(
@@ -1440,7 +1357,7 @@ class WaveCrawler:
         return due, due_dis, len(dis_rows), sitemap_candidates
 
     def _due_distributed_path(self, due_all: DataFrame):
-        """Scale path: robots verdicts in an Arrow pass; due set never hits
+        """Scale path: robots verdicts executor-side; the due set never hits
         the driver. The trigger aggregation is one small job per wave."""
         # grain = shuffle partitions (not core count): the due set feeds the
         # wave's dominant stage (fetch join -> discovery -> candidate Arrow
@@ -1469,15 +1386,12 @@ class WaveCrawler:
         # materialization is a serial barrier the whole wave waits on, and
         # its cost grows with due-set size. The driver-tracked queued count
         # (an upper bound on the due set, maintained without a job) picks
-        # the side; SPARK_GRAFT_DUE_MATERIALIZE forces it for A/Bs
-        # (driver-side knob — never needs to reach executors).
+        # the side.
         due_all = due_all.repartition(
             max(grain, self.spark.sparkContext.defaultParallelism),
             "host_bucket", "id")
-        mode = os.environ.get("SPARK_GRAFT_DUE_MATERIALIZE", "auto")
-        small_due = (self.queued_count is not None
-                     and self.queued_count < DUE_CHECKPOINT_MAX_ROWS)
-        materialize_due = mode == "checkpoint" or (mode == "auto" and small_due)
+        materialize_due = (self.queued_count is not None
+                           and self.queued_count < DUE_CHECKPOINT_MAX_ROWS)
         needs_trigger = self.config.respect_robots_txt and not (
             self._no_new_origins and self._touched_trig_set)
         if materialize_due and not self._robots_side_active:
@@ -1515,26 +1429,16 @@ class WaveCrawler:
             with _timed("robots-fetch"):
                 sitemap_candidates = self._robots_from_triggers(
                     [tuple(r) for r in trig])
-        schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                           for f in due_all.schema.fields) + ", robots_ok boolean"
         if self._robots_side_active:
             # distributed verdicts from the robots_rules side table (built
             # AFTER the trigger fetch so this wave's new rules gate this
-            # wave's due rows): join on origin, scalar-UDF-evaluate only
-            # the joined rules cell — no O(hosts) broadcast, no driver
-            # robots state, and the wide due row stays JVM-side (a
-            # mapInPandas round-trip here cost ~1.5 s/wave). The verdict
-            # FUSES into the wave's single due-side barrier: one
-            # checkpoint of the full due mass carrying robots_ok, with the
-            # UDF inputs NULL-MASKED so rows whose origin joins no rules
-            # row (allowed by definition; the vast majority at scale)
-            # cross Arrow as validity bits, not strings. The r05 A/B of
-            # the alternative — a plain due barrier plus a rule-matched
-            # sliver barrier and a union view — measured WORSE (the union
-            # re-evaluated its broadcast join per downstream action and
-            # the extra barrier added block-manager churn); one masked
-            # fused barrier keeps the r04 single-barrier plan shape at
-            # the split's Arrow cost.
+            # wave's due rows): broadcast-join the origin's decomposed rule
+            # rows and fold them JVM-side (_robots_ok_col) — no O(hosts)
+            # broadcast, no driver robots state, and no Python anywhere in
+            # the due mass (the rules decomposition UDF runs over the SIDE
+            # table, O(origins)). The verdict FUSES into the wave's single
+            # due-side barrier: one checkpoint of the full due mass
+            # carrying robots_ok.
             side = self._robots_side_view()
             if side is None:
                 # no origin has rules: nothing to verdict
@@ -1542,60 +1446,29 @@ class WaveCrawler:
                     with _timed("due-checkpoint"):
                         due_all = due_all.localCheckpoint(eager=True)
                 return due_all, None, 0, sitemap_candidates
-            if os.environ.get("SPARK_GRAFT_VERDICT") == "python":
-                # A/B fallback: the scalar-pandas-UDF verdict (null-masked
-                # inputs, BatchEvalPython in the barrier plan)
-                from ..operators.udfs import robots_allowed_udf
-                allowed = robots_allowed_udf()
-                need = F.col("rules_json").isNotNull()
-                checked = (self._with_rules_json(due_all, side)
-                           .withColumn(
-                               "robots_ok",
-                               F.when(~need, F.lit(True))
-                               .otherwise(allowed(
-                                   F.when(need, F.col("rules_json")),
-                                   F.when(need, F.col("url")))))
-                           .drop("rules_json"))
-            else:
-                # pure-JVM verdict: the rules decomposition UDF runs over
-                # the broadcast SIDE table (O(origins)); the per-row fold
-                # is a Catalyst aggregate — no BatchEvalPython, no Arrow,
-                # no codegen break anywhere in the due mass
-                checked = (self._with_rules_arr(due_all, side)
-                           .withColumn(
-                               "robots_ok",
-                               F.when(F.col("rules_arr").isNull(),
-                                      F.lit(True))
-                               .otherwise(self._robots_ok_col(
-                                   F.col("path"), F.col("rules_arr"))))
-                           .drop("rules_arr"))
+            checked = (self._with_rules_arr(due_all, side)
+                       .withColumn(
+                           "robots_ok",
+                           F.when(F.col("rules_arr").isNull(), F.lit(True))
+                           .otherwise(self._robots_ok_col(
+                               F.col("path"), F.col("rules_arr"))))
+                       .drop("rules_arr"))
             # same materialization rule as the due set itself: a lazily-
             # persisted verdict frame is referenced by every downstream
             # subtree (fetch join, status counters, bodies, candidates,
             # delta) and in-memory cache substitution of per-wave plans is
             # unreliable under AQE — an interleaved sf0.1 A/B measured the
-            # verdict join + UDF re-executing inside the mega action
-            # (mega-agg spikes to 14-24 s vs 5-8 s checkpointed; steady
-            # 2869 vs 4457 URLs/s). This duplicate evaluation — not the
-            # verdict work itself — was the round-3 robots_overhead_x=1.716
-            # regression. Above the due-checkpoint gate everything stays
+            # verdict join re-executing inside the mega action (mega-agg
+            # spikes to 14-24 s vs 5-8 s checkpointed; steady 2869 vs 4457
+            # URLs/s). Above the due-checkpoint gate everything stays
             # lazy/persisted, exactly as for due_all.
-            eager_env = os.environ.get("SPARK_GRAFT_CHECKED_EAGER", "")
-            if eager_env == "0":
-                checked = checked.persist()
-            elif eager_env or materialize_due:
+            if materialize_due:
                 # the wave's ONLY due-side barrier (the politeness windows
                 # evaluate inside it)
                 with _timed("robots-verdict-checkpoint"):
                     checked = checked.localCheckpoint(eager=True)
             else:
                 checked = checked.persist()
-            self._wave_caches.append(checked)
-            due = checked.filter("robots_ok").drop("robots_ok")
-            due_dis = checked.filter("NOT robots_ok").drop("robots_ok")
-            # n_dis DEFERRED (None): fused waves count disallowed rows
-            # inside the mega action; stepwise waves count at the call site.
-            return due, due_dis, None, sitemap_candidates
         else:
             if not (self.config.respect_robots_txt and self.robots.files):
                 return due_all, None, 0, sitemap_candidates
@@ -1609,6 +1482,9 @@ class WaveCrawler:
                                         for u in pdf["url"]]
                     yield pdf
 
+            schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                               for f in due_all.schema.fields) \
+                + ", robots_ok boolean"
             checked = due_all.mapInPandas(check, schema).persist()
         self._wave_caches.append(checked)
         due = checked.filter("robots_ok").drop("robots_ok")
@@ -1861,10 +1737,9 @@ class WaveCrawler:
 
         def bodies_counters(bodies_df):
             return (bodies_df.agg(
-                F.count_if(F.col("gzip_error")).alias("gz"),
-                F.sum(F.size("discovered")).alias("nd"))
-                .select(F.expr("stack(2, 'gz', gz, 'nd', nd) as (k, v)"))
-                .withColumn("s", F.lit(None).cast("string")))
+                F.count_if(F.col("gzip_error")).cast("long").alias("v"))
+                .select(F.lit("gz").alias("k"), "v",
+                        F.lit(None).cast("string").alias("s")))
 
         def rejects_counters(processed_df):
             rej = processed_df.groupBy("reject_reason").agg(
@@ -1934,17 +1809,8 @@ class WaveCrawler:
                           .withColumn("pos", F.col("pos").cast("long"))
                           .withColumn("is_seed_chain", F.lit(False))
                           .withColumn("skip_depth_gate", F.lit(False)))
-            disc = self._pre_dedupe(discovered) \
+            return self._pre_dedupe(discovered) \
                 .select(*[f.name for f in CANDIDATE_SCHEMA.fields])
-            raw_seen = self._raw_seen_view() if cfg.raw_url_prefilter else None
-            if raw_seen is not None:
-                # cross-wave raw-seen anti-join BEFORE python
-                # canonicalization; the dropped difference becomes
-                # queueduplicate in the accounting block below
-                disc = (disc.withColumn("__rk", self._raw_key())
-                        .join(raw_seen, ["raw_url", "__rk"],
-                              "left_anti").drop("__rk"))
-            return disc
 
         def build_redirects():
             return (resp.filter(F.col("_new_status") == "redirected")
@@ -1973,54 +1839,25 @@ class WaveCrawler:
             out = candidates.mapInPandas(
                 make_candidate_processor(cfg, robots_arg, self.crawl_host),
                 PROCESSED_CANDIDATE_SCHEMA)
-            if side is not None \
-                    and not os.environ.get("SPARK_GRAFT_NO_CAND_GATE"):
+            if side is not None:
                 # stamp fetchdisallowed on still-unrejected rows a matching
                 # rule disallows — queueURL's precedence (junk →
                 # invaliddomain → fetchdisallowed; crawler.ts:1483-1523)
                 # holds because rejected rows keep their earlier reason.
-                # Scalar UDF: only (rules_json, url) crosses Arrow; the
-                # wide processed row (referrer struct, state) stays JVM-
-                # side. The earlier mapInPandas round-trip of the full
-                # candidate mass inflated the robots-ON mega-agg ~2.5x
-                # (robots_overhead_x in the bench JSON: 1.7x before
-                # this + the broadcast hints, ~1.03x after).
-                if os.environ.get("SPARK_GRAFT_VERDICT") == "python":
-                    # A/B fallback: scalar-UDF verdict with NULL-masked
-                    # inputs (rows the verdict cannot affect cross Arrow
-                    # as validity bits, not strings)
-                    from ..operators.udfs import robots_allowed_udf
-                    allowed = robots_allowed_udf()
-                    need = (F.col("reject_reason").isNull()
-                            & F.col("rules_json").isNotNull())
-                    out = (self._with_rules_json(out, side)
-                           .withColumn(
-                               "reject_reason",
-                               F.when(need
-                                      & ~allowed(
-                                          F.when(need, F.col("rules_json")),
-                                          F.when(need, F.col("url"))),
-                                      F.lit("fetchdisallowed"))
+                # Pure-JVM verdict fold (see _robots_ok_col): the wide
+                # processed row (referrer struct, state) crosses Arrow only
+                # in the kernel, and the verdict stays in one codegen span.
+                need = (F.col("reject_reason").isNull()
+                        & F.col("rules_arr").isNotNull())
+                out = (self._with_rules_arr(out, side)
+                       .withColumn(
+                           "reject_reason",
+                           F.when(need & ~self._robots_ok_col(
+                                      F.col("path"), F.col("rules_arr")),
+                                  F.lit("fetchdisallowed"))
                            .otherwise(F.col("reject_reason")))
-                           .select(*[f.name for f in
-                                     PROCESSED_CANDIDATE_SCHEMA.fields]))
-                else:
-                    # pure-JVM verdict fold (see _robots_ok_col): keeps
-                    # the whole candidate pipeline in one codegen span —
-                    # the old BatchEvalPython node here materialized the
-                    # full candidate mass between stages every wave
-                    need = (F.col("reject_reason").isNull()
-                            & F.col("rules_arr").isNotNull())
-                    out = (self._with_rules_arr(out, side)
-                           .withColumn(
-                               "reject_reason",
-                               F.when(need & ~self._robots_ok_col(
-                                          F.col("path"),
-                                          F.col("rules_arr")),
-                                      F.lit("fetchdisallowed"))
-                               .otherwise(F.col("reject_reason")))
-                           .select(*[f.name for f in
-                                     PROCESSED_CANDIDATE_SCHEMA.fields]))
+                       .select(*[f.name for f in
+                                 PROCESSED_CANDIDATE_SCHEMA.fields]))
             out = out.persist()
             self._wave_caches.append(out)
             return out
@@ -2029,9 +1866,6 @@ class WaveCrawler:
         processed = None
         id_bounds = None  # quantile split points for dense-id bucketing,
         # harvested from the fused action (fused path only)
-        n_disc_total = None  # set on the prefilter path; read by the
-        # accounting block below — single initialization (a later re-init
-        # once made the whole prefilter dead code)
 
         if fused:
             # -------- fused path: build the full wave plan lazily, then ONE
@@ -2099,8 +1933,6 @@ class WaveCrawler:
                 count("cookieerror", self._apply_set_cookies(set_cookies))
             if n_compressed:
                 count("gziperror", kv.get("gz", 0))
-            if cfg.raw_url_prefilter:
-                n_disc_total = kv.get("nd", 0)
             if self.keep_content and stats["downloaded"]:
                 content = (bodies.join(dl.select("id", "url", "depth"), "id")
                            .select("id", "url", "depth", "body", "text",
@@ -2145,13 +1977,10 @@ class WaveCrawler:
                 else:
                     bodies = bodies.persist()
                     self._wave_caches.append(bodies)
-                if n_compressed or cfg.raw_url_prefilter:
+                if n_compressed:
                     with _timed("bodies-agg"):
                         collect_kv([bodies_counters(bodies)])
-                    if n_compressed:
-                        count("gziperror", kv.get("gz", 0))
-                    if cfg.raw_url_prefilter:
-                        n_disc_total = kv.get("nd", 0)
+                    count("gziperror", kv.get("gz", 0))
 
             # candidates (D4/R1/S3)
             cand_parts = []
@@ -2193,9 +2022,8 @@ class WaveCrawler:
             rej_n = {k2[8:]: v2 for k2, v2 in kv.items()
                      if k2.startswith("rejrows:")}
             n_cand = rej_w.get("__ok", 0)
-            survivors_weighted = sum(rej_w.values())
             # rows that actually ran the python canonicalizer this wave
-            # (post pre-dedupe, post raw-seen prefilter) — perf telemetry
+            # (post pre-dedupe) — perf telemetry
             wave_events["python_candidates"] = sum(rej_n.values())
             for reason, wsum in rej_w.items():
                 if reason != "__ok":
@@ -2204,25 +2032,6 @@ class WaveCrawler:
                            "fetchprevented": "fetchprevented",
                            "fetchconditionerror": "fetchconditionerror",
                            "depthlimit": "depthlimit"}[reason], wsum)
-            if n_disc_total is not None:
-                # attempts the prefilter dropped (seen in earlier waves) are
-                # duplicates of previously-attempted raws
-                n_other = stats["redirected"] + len(sitemap_candidates)
-                dropped = n_disc_total + n_other - survivors_weighted
-                if dropped > 0:
-                    count("queueduplicate", dropped)
-                # grow the raw-seen set with this wave's attempts: ONE
-                # O(wave) distinct-delta checkpoint appended to the
-                # base+parts working set (never a full-set rewrite); the
-                # upper-bound row accounting reuses the kernel row count
-                # already collected by the mega/stepwise action
-                with _timed("raw-seen-update"):
-                    part = processed.select(
-                        "raw_url", self._raw_key().alias("__rk")) \
-                        .distinct().localCheckpoint(eager=True)
-                    self._raw_seen_append(
-                        part, int(wave_events.get("python_candidates",
-                                                  n_disc_total)))
             if n_cand:
                 accepted = processed.filter(F.col("reject_reason").isNull())
                 # within-wave ordered dedupe + seen-set anti-join (Q1/Q2/D3)
@@ -2407,6 +2216,10 @@ class WaveCrawler:
             self._append_enqueue(enq_committed, n_due_total + n_new)
             return
         if self.store is not None:
+            # a wave without enqueues (or a stepwise wave) commits
+            # synchronously: the previous wave's background half must land
+            # first — both write the store manifest, in wave order
+            self._join_commit()
             # the manifest's counters are finalized AFTER the delta parquet
             # is written, counting new rows from the materialized files
             # rather than re-evaluating the enqueue plan.

@@ -123,3 +123,90 @@ def test_split_commit_compaction(spark, pages, tmp_path):
         assert cur == _snapshot(ref)
     finally:
         pc.COMPACT_MIN_ROWS = old
+
+
+def _tree_pages(spark):
+    """Three-level site: the root links two pages, each of those links two
+    leaves, and the leaves link nothing — wave 1 enqueues (a split commit
+    under async_commit), wave 2 enqueues nothing (a synchronous commit)."""
+    from datetime import datetime
+    from simplecrawler_spark.sources.ccpages import CC_PAGES_SCHEMA
+
+    def page(*hrefs):
+        links = "".join(f'<a href="{h}">l</a>' for h in hrefs)
+        return f"<html><body><p>x</p>{links}</body></html>"
+
+    site = {"/": page("/b1", "/b2"),
+            "/b1": page("/c1", "/c2"), "/b2": page("/c2", "/c3"),
+            "/c1": page(), "/c2": page(), "/c3": page()}
+    ts = datetime(2024, 1, 1)
+    rows = [("http://t.test" + p, ts, html.encode(), html, "en")
+            for p, html in site.items()]
+    df = cc_to_crawl_pages(spark.createDataFrame(rows, CC_PAGES_SCHEMA))
+    return df.cache()
+
+
+def test_sync_commit_waits_for_inflight_split_commit(spark, tmp_path,
+                                                      monkeypatch):
+    """A zero-enqueue wave commits synchronously; it must land the previous
+    wave's background half first, or both write the manifest at once (same
+    seq, out-of-order entries). The background half is held back until the
+    main thread reaches its next commit point, so the race is forced."""
+    import threading
+
+    pages = _tree_pages(spark)
+    seed = "http://t.test/"
+
+    def run(store_dir, async_commit):
+        c = WaveCrawler(spark, pages, _cfg(seed, async_commit),
+                        store=SnapshotStore(store_dir, spark, write_slots=8),
+                        keep_content=False)
+        c.seed()
+        c.run(max_waves=5)
+        return c
+
+    sync = run(str(tmp_path / "sync"), False)
+
+    # cleared when a split commit begins, set when the main thread next
+    # commits or joins: the background half cannot start before that
+    gate = threading.Event()
+    orig_begin = SnapshotStore.begin_split_commit
+    orig_finalize = SnapshotStore.finalize_split_commit
+    orig_commit = SnapshotStore.commit_wave
+    orig_join = WaveCrawler._join_commit
+
+    def begin(self, *a, **kw):
+        gate.clear()
+        return orig_begin(self, *a, **kw)
+
+    def slow_finalize(self, *a, **kw):
+        gate.wait(timeout=60)
+        return orig_finalize(self, *a, **kw)
+
+    def commit_wave(self, *a, **kw):
+        gate.set()
+        return orig_commit(self, *a, **kw)
+
+    def join_commit(self):
+        if self._commit_future is not None:
+            gate.set()
+        return orig_join(self)
+
+    monkeypatch.setattr(SnapshotStore, "begin_split_commit", begin)
+    monkeypatch.setattr(SnapshotStore, "finalize_split_commit", slow_finalize)
+    monkeypatch.setattr(SnapshotStore, "commit_wave", commit_wave)
+    monkeypatch.setattr(WaveCrawler, "_join_commit", join_commit)
+    asyn = run(str(tmp_path / "asyn"), True)
+    monkeypatch.undo()
+
+    assert len(sync.metrics) == len(asyn.metrics) == 3
+    st = SnapshotStore(str(tmp_path / "asyn"), spark)
+    assert any(w.get("delta_extra") for w in st.waves)
+    seqs = [w["seq"] for w in st.waves]
+    assert seqs == list(range(len(seqs)))
+    ref = SnapshotStore(str(tmp_path / "sync"), spark)
+    assert [w["wave"] for w in st.waves] == [w["wave"] for w in ref.waves]
+    cur = sorted((r["id"], r["url"], r["status"], r["fetched"])
+                 for r in st.current_frontier().collect())
+    assert cur == _snapshot(sync)
+    pages.unpersist()

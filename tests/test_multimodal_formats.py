@@ -23,15 +23,16 @@ from simplecrawler_spark.operators.multimodal import (FEATURE_SCHEMA,
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def _lzw_trivial(indices, min_code_size):
+def _lzw_trivial(indices, min_code_size, eoi=True):
     """LZW stream that emits CLEAR before every pixel code: no dictionary
-    entries are ever used, so it is trivially correct (and bigger)."""
+    entries are ever used, so it is trivially correct (and bigger).
+    ``eoi=False`` ends the stream at the last pixel code, without EOI."""
     clear = 1 << min_code_size
-    eoi = clear + 1
     codes = []
     for i in indices:
         codes.extend([clear, i])
-    codes.append(eoi)
+    if eoi:
+        codes.append(clear + 1)
     out = bytearray()
     acc = nbits = 0
     size = min_code_size + 1
@@ -48,7 +49,7 @@ def _lzw_trivial(indices, min_code_size):
 
 
 def _gif(width, height, palette, indices, interlace=False, v=b"89a",
-         extensions=b""):
+         extensions=b"", eoi=True):
     """Assemble a single-frame GIF. ``palette``: list of (r, g, b)."""
     n = len(palette)
     size_field = max((n - 1).bit_length(), 1) - 1
@@ -65,7 +66,7 @@ def _gif(width, height, palette, indices, interlace=False, v=b"89a",
                 stored.extend(rows[r])
         indices = stored
     mcs = max(2, size_field + 1)
-    lzw = _lzw_trivial(indices, mcs)
+    lzw = _lzw_trivial(indices, mcs, eoi=eoi)
     blocks = bytearray()
     for off in range(0, len(lzw), 255):
         chunk = lzw[off:off + 255]
@@ -93,6 +94,15 @@ def test_gif_known_pixels():
     g = _gif(4, 2, PALETTE, idx)
     d = decode_gif(g)
     assert (d["width"], d["height"]) == (4, 2)
+    exp = sum(sum(PALETTE[i]) for i in idx) / (3 * len(idx))
+    assert d["mean"] == pytest.approx(exp)
+
+
+def test_gif_stream_without_eoi():
+    # the LZW data ends at the last pixel code: no EOI code follows
+    idx = [3, 0, 2, 1, 1, 2]  # 3x2
+    d = decode_gif(_gif(3, 2, PALETTE, idx, eoi=False))
+    assert (d["width"], d["height"]) == (3, 2)
     exp = sum(sum(PALETTE[i]) for i in idx) / (3 * len(idx))
     assert d["mean"] == pytest.approx(exp)
 

@@ -7,15 +7,20 @@ equivalence IS the robots-compliance contract at scale.
 
 Covers: longest-prefix vs Allow ties, $-anchored and * wildcard rules
 (first-match-wins quirk), regex metacharacters in patterns, percent-
-decoding ('+' stays literal, malformed escapes left in place), rule-order
-semantics, and a pseudo-random grid of generated rule sets x paths."""
+decoding ('+' stays literal, malformed escapes left in place, an escaped
+'%25' decoded exactly once), rule-order semantics, paths mixing valid and
+malformed escapes (only in the canonicalizer's re-escaped form), and a
+pseudo-random grid of generated rule sets x paths."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from simplecrawler_spark.config import CrawlerConfig
 from simplecrawler_spark.functions.robots import eval_rules, parse_robots
+from simplecrawler_spark.functions.urlkit import process_url
 from simplecrawler_spark.operators.udfs import prep_rules_udf
 from simplecrawler_spark.plans.crawl import WaveCrawler
 
@@ -27,12 +32,14 @@ BODIES = {
          "Disallow: /plus+y\n",
     "e": "User-agent: *\nDisallow: /dots.(x)[y]\nDisallow: /w*ld\n",
     "f": "User-agent: *\nAllow: /\nDisallow: /private\n",
+    "g": "User-agent: *\nDisallow: /a%2520b\n",
 }
 
 PATHS = ["/q", "/q7", "/q77", "/q2", "/q5", "/q55", "/q4", "/q48", "/q8",
          "/x8", "/p x/z", "/p%20x/z", "/p x/ok", "/plus+y/z", "/plus y",
          "/dots.(x)[y]/z", "/dots5(x)[y]", "/woooold/z", "/wld", "/",
-         "/q7/deep?k=v", "/%zz/bad", "/trail%", "/private/x", "/priv"]
+         "/q7/deep?k=v", "/%zz/bad", "/trail%", "/private/x", "/priv",
+         "/a%2520b"]
 
 
 def _jvm_verdicts(spark, rows):
@@ -96,3 +103,20 @@ def test_null_rules_row_is_allowed(spark):
                            F.col("path"), F.col("rules_arr"))))
            .collect())
     assert out[0]["ok"] is True
+
+
+def test_mixed_escape_path_is_reescaped_and_matches(spark):
+    """A path mixing a valid and a malformed %-escape is where the fold
+    (leaves the path undecoded) and eval_rules (unquote decodes the valid
+    escape) would part ways. The canonicalizer never emits one: it
+    re-escapes every '%' of such a path, and on that form the fold's
+    verdict is eval_rules'."""
+    opts = CrawlerConfig(initial_url="http://g.test/").url_options()
+    item = process_url("http://g.test/a%20b%zz", None, 0, opts)
+    assert "%" in item["path"]
+    assert re.fullmatch(r"(?:[^%]|%[0-9A-Fa-f]{2})*", item["path"])
+    rj = parse_robots("http://g.test/robots.txt",
+                      BODIES["g"]).rules_payload("*")
+    want = bool(eval_rules(rj, item["url"]))
+    assert want is False
+    assert _jvm_verdicts(spark, [(rj, item["path"])]) == [want]

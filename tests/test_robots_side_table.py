@@ -24,6 +24,7 @@ Disallow: /private
 Allow: /private/ok
 Disallow: /tmp*.bak$
 Disallow: /exact$
+Disallow: /a%2520b
 Allow: /
 
 User-agent: greedy
@@ -44,6 +45,7 @@ PROBES = [
     "http://h.test/exact/child",
     "http://h.test/other?q=1",
     "http://h.test/%70rivate",          # percent-decoded before matching
+    "http://h.test/a%2520b",            # decoded once, on both sides
 ]
 
 

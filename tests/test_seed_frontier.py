@@ -55,55 +55,3 @@ def test_seed_frontier_with_store_and_ids(spark, tmp_path):
     assert resumed.queued_count == c.queued_count
     assert resumed.next_id == c.next_id
     pages.unpersist()
-
-
-def test_raw_prefilter_frontier_identical(spark):
-    from simplecrawler_spark.config import CrawlerConfig as CC
-    cc = synth_cc_pages(spark, 300, 10)
-    pages = cc_to_crawl_pages(cc).cache()
-    pages.count()
-    # seed with a URL that actually exists in the corpus so the crawl
-    # discovers links for several waves (http://h0.test/p/0 may 404:
-    # host_of(0) need not be 0)
-    seed_url = cc.orderBy("url").first()["url"]
-
-    def run(prefilter):
-        cfg = CC(initial_url=seed_url, filter_by_domain=False,
-                 respect_robots_txt=False, record_fetch_log=False,
-                 id_mode="composite", tokens_per_host_per_wave=64,
-                 max_waves=4, raw_url_prefilter=prefilter)
-        crawler = WaveCrawler(spark, pages, cfg, keep_content=False)
-        crawler.seed()
-        for _ in range(4):
-            if crawler.queued_count == 0:
-                break
-            crawler.run_wave()
-        return crawler
-
-    a, b = run(False), run(True)
-    snap = lambda c: sorted(
-        (r["id"], r["url"], r["status"], r["fetched"], r["depth"])
-        for r in c.frontier.collect())
-    assert snap(a) == snap(b)
-    assert a.events.get("queueadd") == b.events.get("queueadd")
-    # total attempts conserved: duplicates may be reclassified, not lost
-    total = lambda c: sum(c.events.get(k, 0) for k in
-                          ("queueadd", "queueduplicate", "junkurl"))
-    assert total(a) == total(b)
-    # the prefilter must actually be LIVE: the raw-seen set is populated and
-    # later waves push strictly fewer rows through the python canonicalizer
-    assert b._raw_seen_view() is not None and b._raw_seen_view().count() > 0
-    assert a._raw_seen_view() is None
-    # incremental maintenance: one O(wave) distinct-delta part per
-    # candidate-producing wave, NO per-wave rewrite of the accumulated set
-    # (base stays empty until the LSM ratio/width trigger — far above this
-    # corpus), and the upper-bound accounting never launched a count job
-    assert b._raw_seen_base is None
-    assert 1 <= len(b._raw_seen_parts) <= len(b.metrics)
-    assert b._raw_seen_part_rows == sum(
-        m.get("python_candidates", 0) for m in b.metrics)
-    pc = lambda c: [m.get("python_candidates", 0) for m in c.metrics]
-    assert len(pc(a)) == len(pc(b)) and len(pc(b)) >= 3
-    assert sum(pc(b)[1:]) < sum(pc(a)[1:]), (pc(a), pc(b))
-    assert all(x <= y for x, y in zip(pc(b), pc(a)))
-    pages.unpersist()
